@@ -1,0 +1,1 @@
+"""linkgraph benchmark: see run.py and README.md."""
